@@ -49,6 +49,35 @@ object Constraints {
   def scalarVios(id: String, pred: Column, path: String, bound: String, actual: Column): Column =
     when(!coalesce(pred, lit(false)), array(entry(id, lit(path), bound, actual))).otherwise(noVios)
 
+  /** Pay-per-defect gate: rows passing `pred` (the overwhelming majority)
+    * never run the per-element `entries` transform. */
+  def gatedVios(pred: Column, entries: Column): Column =
+    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
+
+  /** Per-element violations of array column `col`: one entry per element
+    * for which `bad(value, index)` holds, at path `col.<i>` with the
+    * element as actual. Built with higher-order `filter((x,i) => …)` so
+    * only failing elements materialize, gated on `pred`. */
+  def elemVios(id: String, col: String, pred: Column, bound: String,
+      bad: (Column, Column) => Column): Column = {
+    val failIdx = org.apache.spark.sql.functions.filter(
+      transform(org.apache.spark.sql.functions.col(col),
+        (x: Column, i: Column) => struct(x.as("v"), i.as("i"))),
+      (s: Column) => bad(s.getField("v"), s.getField("i")))
+    gatedVios(pred, transform(failIdx, (s: Column) =>
+      entry(id, concat(lit(col + "."), s.getField("i").cast(StringType)), bound, s.getField("v"))))
+  }
+
+  /** Per-key violations of map column `col`: one entry per key for which
+    * `bad(key)` holds, at path `col.<key>`, gated on `pred`. */
+  def keyVios(id: String, col: String, pred: Column, bound: String,
+      bad: Column => Column, actual: Column => Column): Column = {
+    val keys = org.apache.spark.sql.functions.filter(
+      map_keys(org.apache.spark.sql.functions.col(col)), bad)
+    gatedVios(pred, transform(keys, (k: Column) =>
+      entry(id, concat(lit(col + "."), k), bound, actual(k))))
+  }
+
   /** Resolve a dotted path (`some_inner.inner_value`) through nested
     * StructTypes — the schema-walk the reference does per-value at runtime
     * (serde.rs), done ONCE at compile time here. */
@@ -561,18 +590,10 @@ final case class ArrayElemRange(col: String, min: Double, max: Double) extends R
   // native single-loop-per-row expression; forall() would interpret a
   // lambda per token (graft.functions.ArrayAllInRange)
   def pred = c.isNull || graft.functions.VecFunctions.array_all_in_range(c, min, max)
-  override def vios: Column = {
-    // null elements are violations too (data corruption in a tokens array):
-    // coalesce keeps them in the filter instead of dropping NULL predicates
-    val failIdx = org.apache.spark.sql.functions.filter(
-      transform(c, (x: Column, i: Column) => struct(x.as("v"), i.as("i"))),
-      (s: Column) => !coalesce(elemOk(s.getField("v")), lit(false)))
-    val entries = transform(failIdx, (s: Column) =>
-      entry(id, concat(lit(col + "."), s.getField("i").cast(StringType)), boundStr, s.getField("v")))
-    // conditional: passing rows (the overwhelming majority) never run the
-    // per-element transform — violation construction is pay-per-defect
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  // null elements are violations too (data corruption in a tokens array):
+  // coalesce keeps them in the filter instead of dropping NULL predicates
+  override def vios: Column =
+    elemVios(id, col, pred, boundStr, (v, _) => !coalesce(elemOk(v), lit(false)))
   protected def pathStr = col
   protected def boundStr = s"elem in [$min,$max]"
   protected def actualCol = c
@@ -587,14 +608,8 @@ final case class ArrayElemIn(col: String, values: Seq[Any]) extends RowConstrain
   private def c = org.apache.spark.sql.functions.col(col)
   private def elemOk(x: Column) = x.isin(values: _*)
   def pred = c.isNull || coalesce(forall(c, elemOk _), lit(false))
-  override def vios: Column = {
-    val failIdx = org.apache.spark.sql.functions.filter(
-      transform(c, (x: Column, i: Column) => struct(x.as("v"), i.as("i"))),
-      (s: Column) => !coalesce(elemOk(s.getField("v")), lit(false)))
-    val entries = transform(failIdx, (s: Column) =>
-      entry(id, concat(lit(col + "."), s.getField("i").cast(StringType)), boundStr, s.getField("v")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column =
+    elemVios(id, col, pred, boundStr, (v, _) => !coalesce(elemOk(v), lit(false)))
   protected def pathStr = col
   protected def boundStr = s"elem in {${values.take(8).mkString(",")}${if (values.size > 8) ",…" else ""}}"
   protected def actualCol = c
@@ -765,7 +780,7 @@ final case class ArrayUniqueItems(col: String) extends RowConstraint {
     // violation row (report and violations frame must never disagree)
     val withFallback = when(size(entries) > 0, entries)
       .otherwise(array(entry(id, lit(col), boundStr, actualCol)))
-    when(coalesce(pred, lit(false)), noVios).otherwise(withFallback).cast(vioArrayType)
+    gatedVios(pred, withFallback)
   }
   protected def pathStr = col
   protected def boundStr = "all elements distinct"
@@ -911,12 +926,8 @@ final case class MapKeysIn(col: String, allowed: Seq[String]) extends RowConstra
   private def c = org.apache.spark.sql.functions.col(col)
   private def keyOk(k: Column) = k.isin(allowed: _*)
   def pred = c.isNull || forall(map_keys(c), keyOk _)
-  override def vios: Column = {
-    val bad = org.apache.spark.sql.functions.filter(map_keys(c), (k: Column) => !keyOk(k))
-    val entries = transform(bad, (k: Column) =>
-      entry(id, concat(lit(col + "."), k), s"keys in {${allowed.mkString(",")}}", lit("unknown property")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column =
+    keyVios(id, col, pred, boundStr, k => !keyOk(k), _ => lit("unknown property"))
   protected def pathStr = col
   protected def boundStr = s"keys in {${allowed.mkString(",")}}"
   protected def actualCol = c.cast(StringType)
@@ -937,7 +948,7 @@ final case class MapRequiredKeys(col: String, required: Seq[String]) extends Row
       array(required.map(lit): _*), (k: Column) => !map_contains_key(c, k))
     val entries = transform(missing, (k: Column) =>
       entry(id, concat(lit(col + "."), k), "required", lit("missing")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
+    gatedVios(pred, entries)
   }
   protected def pathStr = col
   protected def boundStr = s"required {${required.mkString(",")}}"
@@ -980,12 +991,7 @@ final case class MapKeyPattern(col: String, pattern: String) extends RowConstrai
   }
   private def c = org.apache.spark.sql.functions.col(col)
   def pred = c.isNull || forall(map_keys(c), (k: Column) => k.rlike(pattern))
-  override def vios: Column = {
-    val bad = org.apache.spark.sql.functions.filter(map_keys(c), (k: Column) => !k.rlike(pattern))
-    val entries = transform(bad, (k: Column) =>
-      entry(id, concat(lit(col + "."), k), s"key pattern $pattern", k))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column = keyVios(id, col, pred, boundStr, k => !k.rlike(pattern), k => k)
   protected def pathStr = col
   protected def boundStr = s"key pattern $pattern"
   protected def actualCol = c.cast(StringType)
@@ -1010,12 +1016,7 @@ final case class MapKeyLength(col: String, min: Option[Int] = None, max: Option[
     min.map(a => n >= a).getOrElse(lit(true)) && max.map(b => n <= b).getOrElse(lit(true))
   }
   def pred = c.isNull || forall(map_keys(c), keyOk _)
-  override def vios: Column = {
-    val bad = org.apache.spark.sql.functions.filter(map_keys(c), (k: Column) => !keyOk(k))
-    val entries = transform(bad, (k: Column) =>
-      entry(id, concat(lit(col + "."), k), boundStr, length(k)))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column = keyVios(id, col, pred, boundStr, k => !keyOk(k), length)
   protected def pathStr = col
   protected def boundStr = s"key length in [${min.getOrElse(0)},${max.map(_.toString).getOrElse("inf")}]"
   protected def actualCol = c.cast(StringType)
@@ -1053,7 +1054,7 @@ final case class MapValueRange(col: String, keyPattern: String, min: Double, max
       e.getField("key").rlike(keyPattern) && !coalesce(vOk(e.getField("value")), lit(false)))
     val entries = transform(bad, (e: Column) =>
       entry(id, concat(lit(col + "."), e.getField("key")), s"value in [$min,$max]", e.getField("value")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
+    gatedVios(pred, entries)
   }
   protected def pathStr = col
   protected def boundStr = s"value in [$min,$max]"
@@ -1201,15 +1202,9 @@ final case class ArrayTailRange(col: String, fromPos: Int, min: Double, max: Dou
   def pred = c.isNull ||
     graft.functions.VecFunctions.array_all_in_range(
       slice(c, lit(fromPos), greatest(size(c), lit(0))), min, max)
-  override def vios: Column = {
-    val failIdx = org.apache.spark.sql.functions.filter(
-      transform(c, (x: Column, i: Column) => struct(x.as("v"), i.as("i"))),
-      (s: Column) => s.getField("i") >= fromPos - 1 &&
-        !coalesce(elemOk(s.getField("v")), lit(false)))
-    val entries = transform(failIdx, (s: Column) =>
-      entry(id, concat(lit(col + "."), s.getField("i").cast(StringType)), boundStr, s.getField("v")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column =
+    elemVios(id, col, pred, boundStr,
+      (v, i) => i >= fromPos - 1 && !coalesce(elemOk(v), lit(false)))
   protected def pathStr = col
   protected def boundStr = s"elem@>=$fromPos in [$min,$max]"
   protected def actualCol = c
@@ -1229,14 +1224,7 @@ final case class ArrayElemPattern(col: String, pattern: String) extends RowConst
   private def c = org.apache.spark.sql.functions.col(col)
   private def elemOk(x: Column) = coalesce(x.rlike(pattern), lit(false))
   def pred = c.isNull || coalesce(forall(c, elemOk _), lit(false))
-  override def vios: Column = {
-    val failIdx = org.apache.spark.sql.functions.filter(
-      transform(c, (x: Column, i: Column) => struct(x.as("v"), i.as("i"))),
-      (s: Column) => !elemOk(s.getField("v")))
-    val entries = transform(failIdx, (s: Column) =>
-      entry(id, concat(lit(col + "."), s.getField("i").cast(StringType)), boundStr, s.getField("v")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column = elemVios(id, col, pred, boundStr, (v, _) => !elemOk(v))
   protected def pathStr = col
   protected def boundStr = s"elem pattern $pattern"
   protected def actualCol = c.cast(StringType)
@@ -1262,14 +1250,7 @@ final case class ArrayElemLength(col: String, min: Option[Int] = None, max: Opti
     coalesce(lo && hi, lit(false))
   }
   def pred = c.isNull || coalesce(forall(c, elemOk _), lit(false))
-  override def vios: Column = {
-    val failIdx = org.apache.spark.sql.functions.filter(
-      transform(c, (x: Column, i: Column) => struct(x.as("v"), i.as("i"))),
-      (s: Column) => !elemOk(s.getField("v")))
-    val entries = transform(failIdx, (s: Column) =>
-      entry(id, concat(lit(col + "."), s.getField("i").cast(StringType)), boundStr, s.getField("v")))
-    when(coalesce(pred, lit(false)), noVios).otherwise(entries).cast(vioArrayType)
-  }
+  override def vios: Column = elemVios(id, col, pred, boundStr, (v, _) => !elemOk(v))
   protected def pathStr = col
   protected def boundStr = s"elem length in [${min.getOrElse(0)},${max.map(_.toString).getOrElse("inf")}]"
   protected def actualCol = c.cast(StringType)

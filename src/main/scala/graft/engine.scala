@@ -102,13 +102,12 @@ final case class CompiledSuite(
   /** Per-bucket pass/fail + per-check fail counts + optional numeric metrics
     * (e.g. "n_tok" -> min/max/sum). One two-phase hash agg. */
   def bucketReport(annotated: DataFrame, metrics: Map[String, Column] = Map.empty): DataFrame = {
-    val allOk = rowChecks.indices.map(i => col(okCol(i))).reduceOption(_ && _).getOrElse(lit(true))
     val failCounts = rowChecks.zipWithIndex.map { case (c, i) =>
       sum((!col(okCol(i))).cast(LongType)).as(s"__fail_$i")
     }
     val metricAggs = metrics.toSeq.map { case (name, c) => c.as(name) }
     val aggd = annotated
-      .withColumn("__all_ok", allOk)
+      .withColumn("__all_ok", allOkCol)
       .groupBy(col(BUCKET).as("bucket_id"))
       .agg(
         count(lit(1)).as("rows"),

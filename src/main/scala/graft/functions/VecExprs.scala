@@ -660,9 +660,12 @@ case class LongArrayEqCount(left: Expression, right: Expression)
   * intersection ARRAY: the Jaccard verification stages only ever read the
   * intersection's SIZE, and `array_intersect` + `size` built (then threw
   * away) an O(|a∩b|) string array per scored pair. One hash-set build per
-  * side, a counter, zero per-pair output allocation. */
+  * side, a counter, zero per-pair output allocation. Non-string arrays
+  * fail at analysis (`compute` reads every element as a UTF8String). */
 case class StringArrayIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes =
+    Seq(ArrayType(StringType), ArrayType(StringType))
   override def dataType: DataType = IntegerType
   def compute(a: ArrayData, b: ArrayData): Int = {
     val nb = b.numElements()

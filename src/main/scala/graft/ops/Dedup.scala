@@ -192,7 +192,10 @@ object Dedup {
     // maxBlock == Int.MaxValue is the documented "unbounded" sentinel: no
     // block can be over the cap, so the guard pass — a full block-count
     // aggregation + broadcast anti-join that can never drop anything — is
-    // skipped outright instead of computed to find an empty set.
+    // skipped outright instead of computed to find an empty set. The skip
+    // also makes the sentinel truly unbounded: running the guard would
+    // compare the Long block count against the Int cap and so still drop
+    // any block over 2^31−1 rows.
     val guarded =
       if (maxBlock == Int.MaxValue) base
       else {
@@ -452,8 +455,8 @@ object Dedup {
     // distinct's exchange carried the FULL |e| rows every round; dropping
     // it saves that exchange and one stage barrier per round, while the
     // duplicates that now ride smallStar's groupBy are absorbed by map-side
-    // combine (measured: ProbeCcR06, labels asserted identical, CC call
-    // 3.4→2.8 s / 2.8→2.4 s on the 139,714-pair fixture graph).
+    // combine (measured: OPTIMIZATION_r06.md §1, labels asserted identical,
+    // CC call 3.4→2.8 s / 2.8→2.4 s on the 139,714-pair fixture graph).
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       val mins = sym.groupBy("src").agg(min("dst").as("__mn"))

@@ -250,8 +250,9 @@ object Sampling {
     * smallest (gate, key, rowhash) rows per stratum with MAP-SIDE partial
     * aggregation, so a hot stratum contributes O(partitions · k) rows to
     * its reducer instead of serializing the entire stratum into one task's
-    * sort (the round-4 perf-weak this retires; ProbeSkew measures the
-    * hostile-stratum ratio). Output is the identical multiset to the
+    * sort (the round-4 perf-weak this retires; BASELINE.md "Adversarial
+    * skew: the EXACT cap's two-phase formulation" has the hostile-stratum
+    * ratio). Output is the identical multiset to the
     * row_number() formulation, including boundary-tie behavior (fully
     * identical duplicate rows are interchangeable at the cap boundary).
     * MEMORY contract: k · row-size per stratum per task must fit on an
@@ -270,7 +271,7 @@ object Sampling {
     // sort key — including the every-column rowHash tie-breaker — and
     // heap-copied (gate, key, hash, payload) entries for ALL n rows, which
     // made the UNIFORM case (every stratum over cap, no skew) the worst
-    // case (ProbeSkew: 17.3 s uniform vs 7.5 s hostile at 16 M rows).
+    // case (17.3 s uniform vs 7.5 s hostile at 16 M rows, OPTIMIZATION_r06.md §8).
     // Pass 1 instead histograms the gate — uniform over [0, Denom) by
     // construction — into `CapBuckets` fixed-width buckets per stratum:
     // a plain two-phase (stratum, bucket) count with bounded partial

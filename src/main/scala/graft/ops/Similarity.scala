@@ -100,7 +100,8 @@ object Similarity {
     * (≈ log2(n) + 4-8 slack bits; the packed band value holds up to 63).
     * Measured at 1.12 M dim-64 vectors: 16 planes → ~150 M accidental
     * candidates (90 s dedup + 283 s verify at local[16]); 24 planes →
-    * ~0.5 M (whole pipeline 49 s) — see graft.ProbeEmbed / BASELINE.md.
+    * ~0.5 M (whole pipeline 49 s) — see BASELINE.md "SemDeDup embedding
+    * dedup at 1 M vectors".
     * Recall for true near-dups is governed by the BAND count, which stays
     * fixed. Very low dimensionality (≲32) additionally skews bucket
     * occupancy (correlated planes); production embedding widths are fine. */

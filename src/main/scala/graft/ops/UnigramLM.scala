@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * combine) -> TakeOrdered(V) — the only shuffle is on term keys, and the
   * driver holds just the top-V vocabulary (V ~ 10^4-10^5 at production
   * scale). Scoring is a ZERO-shuffle projection: the vocab rides to
-  * executors inside [[graft.functions.UnigramLogProbFp]], so at 100 TB it
+  * executors inside [[graft.functions.NgramLogProbFp]], so at 100 TB it
   * runs at scan speed. All scores are fixed-point integers (per-term
   * `round(ln(c/N)*1e6)`), order-independent and SQL-oracle-reproducible.
   */
@@ -27,11 +27,12 @@ object UnigramLM {
     regexp_extract_all(lower(text), lit(tokenPattern), lit(0))
 
   /** Trained model: top-V terms with corpus counts, plus the TOTAL token
-    * count (including out-of-vocabulary tokens, which score as count 1). */
+    * count (including out-of-vocabulary tokens, which score as count 1).
+    * Scores as the order-1 [[NgramModel]]. */
   case class Model(vocab: Map[String, Long], totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
     def logProbFp(tokensCol: Column): Column =
-      graft.functions.TextFunctions.unigram_logprob_fp(tokensCol, vocab, totalTokens)
+      graft.functions.TextFunctions.ngram_logprob_fp(tokensCol, Seq(vocab), totalTokens)
   }
 
   /** Train on a corpus. Vocabulary ties at the V boundary break
@@ -62,45 +63,22 @@ object UnigramLM {
     * Token i scores `ln(0.5·c(prev,cur)/c(prev) + 0.5·c(cur)/N)` when the
     * predecessor is in-vocabulary; the first token and OOV-predecessor
     * tokens back off to the plain unigram — the next rung toward CCNet's
-    * 5-gram KenLM, still fully SQL-oracle-reproducible (dyadic 0.5). */
+    * 5-gram KenLM, still fully SQL-oracle-reproducible (dyadic 0.5).
+    * Scores as the order-2 [[NgramModel]]. */
   case class BigramModel(unigrams: Map[String, Long], bigrams: Map[String, Long],
       totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
     def logProbFp(tokensCol: Column): Column =
-      graft.functions.TextFunctions.bigram_logprob_fp(
-        tokensCol, unigrams, bigrams, totalTokens)
+      graft.functions.TextFunctions.ngram_logprob_fp(
+        tokensCol, Seq(unigrams, bigrams), totalTokens)
   }
 
-  /** Adjacent-word bigrams as U+0001-joined strings (in-row — token
-    * occurrences never shuffle; only per-doc bigram instances explode into
-    * the count agg). */
-  private def bigramsCol(toks: Column): Column = {
-    val m = greatest(size(toks) - 1, lit(0))
-    zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => concat(a, lit("\u0001"), b))
-  }
-
-  /** Train unigram + bigram vocabularies. Ties at either V boundary break
-    * deterministically by (count desc, key asc).
-    *
-    * `trainFraction` is the SCALE path, not a docstring: the n-gram count
-    * aggs shuffle one string per token occurrence, so at corpus scale train
-    * on a deterministic reference sample (`Sampling.deterministicSample` by
-    * `idCol`) the way CCNet trains its KenLM on Wikipedia — the model only
-    * needs stable counts, and scoring (the full-corpus pass) stays a
-    * zero-shuffle projection regardless. Default 1.0 trains on everything
-    * (small corpora / oracle parity); any fraction < 1.0 requires `idCol`.
-    * The sample is hash-gated: deterministic, parallelism-independent. */
+  /** Train unigram + bigram vocabularies: [[trainNgram]] at order 2. */
   def trainBigram(df: DataFrame, textCol: String, vocabSize: Int,
       bigramSize: Int, trainFraction: Double = 1.0,
       idCol: String = ""): BigramModel = {
-    val base0 = trainingSlice(df, trainFraction, idCol)
-    val base = train(base0, textCol, vocabSize)
-    val bigrams = base0.select(explode(bigramsCol(tokens(col(textCol)))).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c"))
-      .orderBy(desc("c"), col("bg")).limit(bigramSize)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    BigramModel(base.vocab, bigrams, base.totalTokens)
+    val m = trainNgram(df, textCol, Seq(vocabSize, bigramSize), trainFraction, idCol)
+    BigramModel(m.grams(0), m.grams(1), m.totalTokens)
   }
 
   /** Shared sample-gating for every trainer that offers `trainFraction`
@@ -130,38 +108,24 @@ object UnigramLM {
     *  - the bigram interpolation `ln(0.5·c2/c1 + 0.5·c1/N)` when only p1 is
     *    known;
     *  - the plain unigram when the predecessor is unknown or absent.
-    * All weights dyadic ⇒ the IEEE arithmetic mirrors exactly in SQL. */
+    * All weights dyadic ⇒ the IEEE arithmetic mirrors exactly in SQL.
+    * Scores as the order-3 [[NgramModel]]. */
   case class TrigramModel(unigrams: Map[String, Long], bigrams: Map[String, Long],
       trigrams: Map[String, Long], totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
     def logProbFp(tokensCol: Column): Column =
-      graft.functions.TextFunctions.trigram_logprob_fp(
-        tokensCol, unigrams, bigrams, trigrams, totalTokens)
+      graft.functions.TextFunctions.ngram_logprob_fp(
+        tokensCol, Seq(unigrams, bigrams, trigrams), totalTokens)
   }
 
-  /** Adjacent-word trigrams as U+0001-joined strings (in-row, like
-    * [[bigramsCol]]). */
-  private def trigramsCol(toks: Column): Column = {
-    val m = greatest(size(toks) - 2, lit(0))
-    zip_with(
-      zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-        (a, b) => concat(a, lit("\u0001"), b)),
-      slice(toks, lit(3), m),
-      (ab, c) => concat(ab, lit("\u0001"), c))
-  }
-
-  /** Train unigram + bigram + trigram vocabularies (same deterministic
-    * tie-breaks; same `trainFraction` scale path as [[trainBigram]]). */
+  /** Train unigram + bigram + trigram vocabularies: [[trainNgram]] at
+    * order 3. */
   def trainTrigram(df: DataFrame, textCol: String, vocabSize: Int,
       bigramSize: Int, trigramSize: Int, trainFraction: Double = 1.0,
       idCol: String = ""): TrigramModel = {
-    val base0 = trainingSlice(df, trainFraction, idCol)
-    val bi = trainBigram(base0, textCol, vocabSize, bigramSize)
-    val trigrams = base0.select(explode(trigramsCol(tokens(col(textCol)))).as("tg"))
-      .groupBy("tg").agg(count(lit(1)).as("c"))
-      .orderBy(desc("c"), col("tg")).limit(trigramSize)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    TrigramModel(bi.unigrams, bi.bigrams, trigrams, bi.totalTokens)
+    val m = trainNgram(df, textCol, Seq(vocabSize, bigramSize, trigramSize),
+      trainFraction, idCol)
+    TrigramModel(m.grams(0), m.grams(1), m.grams(2), m.totalTokens)
   }
 
   /** Attach trigram-interpolated `logprob_fp` and `n_tok`. */
@@ -177,8 +141,8 @@ object UnigramLM {
     * on the longest available context with dyadic weights
     * `0.5, 0.25, …, 0.5^L` (the unigram term sharing the lowest weight) —
     * see [[graft.functions.NgramLogProbFp]] for the exact arithmetic.
-    * Orders 1-3 reproduce [[Model]]/[[BigramModel]]/[[TrigramModel]]
-    * bit-for-bit (Round5Spec asserts it). */
+    * [[Model]]/[[BigramModel]]/[[TrigramModel]] are its order-1..3 views:
+    * each hands the same kernel the levels [[trainNgram]] builds. */
   case class NgramModel(grams: Seq[Map[String, Long]], totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
     def order: Int = grams.length
@@ -186,8 +150,9 @@ object UnigramLM {
       graft.functions.TextFunctions.ngram_logprob_fp(tokensCol, grams, totalTokens)
   }
 
-  /** Adjacent-word k-grams as U+0001-joined strings (in-row; generalizes
-    * [[bigramsCol]]/[[trigramsCol]]). */
+  /** Adjacent-word k-grams as U+0001-joined strings (in-row — token
+    * occurrences never shuffle; only per-doc k-gram instances explode into
+    * the count agg). */
   private def ngramsCol(toks: Column, k: Int): Column = {
     val m = greatest(size(toks) - (k - 1), lit(0))
     (2 to k).foldLeft(slice(toks, lit(1), m)) { (acc, j) =>
@@ -197,11 +162,19 @@ object UnigramLM {
 
   /** Train bounded vocabularies for every order 1..`sizes.length` in one
     * call — `sizes(j)` caps the (j+1)-gram vocabulary, ties at every
-    * boundary break deterministically by (count desc, key asc); same
-    * `trainFraction` scale path as [[trainBigram]]. Each level is its own
-    * explode→count agg (map-side combine; the only shuffle is on n-gram
-    * keys) — independent levels, so on a real cluster they can even be
-    * submitted concurrently; the driver holds only the top-K maps. */
+    * boundary break deterministically by (count desc, key asc). Each level
+    * is its own explode→count agg (map-side combine; the only shuffle is on
+    * n-gram keys) — independent levels, so on a real cluster they can even
+    * be submitted concurrently; only the top-K maps are collected.
+    *
+    * `trainFraction` is the SCALE path, not a docstring: the n-gram count
+    * aggs shuffle one string per token occurrence, so at corpus scale train
+    * on a deterministic reference sample (`Sampling.deterministicSample` by
+    * `idCol`) the way CCNet trains its KenLM on Wikipedia — the model only
+    * needs stable counts, and scoring (the full-corpus pass) stays a
+    * zero-shuffle projection regardless. Default 1.0 trains on everything
+    * (small corpora / oracle parity); any fraction < 1.0 requires `idCol`.
+    * The sample is hash-gated: deterministic, parallelism-independent. */
   def trainNgram(df: DataFrame, textCol: String, sizes: Seq[Int],
       trainFraction: Double = 1.0, idCol: String = ""): NgramModel = {
     require(sizes.nonEmpty, "need at least a unigram vocabulary size")

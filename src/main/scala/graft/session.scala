@@ -41,7 +41,13 @@ object GraftSession {
     * broadcast fetch, cross-process task/aggregate serialization) — the
     * default is the plain local[cores] the bench contract specifies. */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
+    val master = sys.env.get("SPARK_GRAFT_MASTER") match {
+      case Some(m) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"GraftSession.local: master $m from SPARK_GRAFT_MASTER overrides local[$cores]")
+        m
+      case None => s"local[$cores]"
+    }
     val s = tuned(SparkSession.builder().master(master).appName(appName), cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -729,6 +729,7 @@ class Round3Spec extends SparkSpec {
   }
 
   test("UnigramLM: hand-computed fixed-point likelihoods and the gate") {
+    // pins order 1 of NgramLogProbFp (Model scores through it)
     import graft.ops.UnigramLM
     // corpus: a:3 b:2 c:1, total 6; V=2 keeps {a:3, b:2}, c is OOV (count 1)
     val df = Seq(("d1", "A a b"), ("d2", "a c!"), ("d3", "b"), ("d4", "   "))
@@ -877,6 +878,7 @@ class Round3Spec extends SparkSpec {
   }
 
   test("BigramLM: interpolated scores, first-token unigram, OOV fallbacks") {
+    // pins order 2 of NgramLogProbFp (BigramModel scores through it)
     import graft.ops.UnigramLM
     // uni a:3 b:2 c:1 (N=6); bigrams a-b:2, a-c:1
     val df = Seq(("d1", "a b"), ("d2", "a b"), ("d3", "a c")).toDF("doc_id", "text")
@@ -1069,12 +1071,12 @@ class Round3Spec extends SparkSpec {
       try df.select(concat_ws("|",
           repetition_stats(col("text")).cast("string"),
           graft.functions.TextFunctions.word_counts(col("text")).cast("string"),
-          graft.functions.TextFunctions.unigram_logprob_fp(
-            split(col("text"), " "), Map("x" -> 5L, "two" -> 2L), 10L)
+          graft.functions.TextFunctions.ngram_logprob_fp(
+            split(col("text"), " "), Seq(Map("x" -> 5L, "two" -> 2L)), 10L)
             .cast("string"),
-          graft.functions.TextFunctions.bigram_logprob_fp(
-            split(col("text"), " "), Map("x" -> 5L, "two" -> 2L),
-            Map("x\u0001x" -> 3L), 10L).cast("string")).as("s"))
+          graft.functions.TextFunctions.ngram_logprob_fp(
+            split(col("text"), " "), Seq(Map("x" -> 5L, "two" -> 2L),
+            Map("x\u0001x" -> 3L)), 10L).cast("string")).as("s"))
         .collect().map(_.getString(0)).toSeq
       finally prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)

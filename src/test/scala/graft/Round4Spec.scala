@@ -369,6 +369,7 @@ class Round4Spec extends SparkSpec {
   // ---------------------------------------------------------------------
 
   test("trainTrigram/scoreTrigram: hand-computed interpolation incl. full backoff chain") {
+    // pins order 3 of NgramLogProbFp (TrigramModel scores through it)
     import graft.ops.UnigramLM
     // training: "a b c a b c a b d" -> N=9; uni a:3 b:3 c:2 d:1;
     // bi (a,b):3 (b,c):2 (c,a):2 (b,d):1; tri (a,b,c):2 (b,c,a):2 (c,a,b):2 (a,b,d):1
@@ -419,7 +420,7 @@ class Round4Spec extends SparkSpec {
     assert(scored.getLong(0) === expected && scored.getLong(1) === 3L)
   }
 
-  test("TrigramLogProbFp compiles under FORCED codegen, matching interpreted eval") {
+  test("TrigramModel's order-3 NgramLogProbFp: FORCED codegen matches interpreted eval") {
     import graft.ops.UnigramLM
     val trainDf = Seq((1L, "a b c a b c a b d")).toDF("doc_id", "text")
     val m = UnigramLM.trainTrigram(trainDf, "text", 10, 10, 10)

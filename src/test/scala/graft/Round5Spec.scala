@@ -71,7 +71,11 @@ class Round5Spec extends SparkSpec {
   }
 
   test("NgramModel orders 1-3 reproduce the dedicated kernels bit-for-bit") {
+    // the unigram/bigram/trigram model views score through the order-N
+    // kernel: each must hand it the levels trainNgram builds at its order,
+    // in the same order
     import graft.ops.UnigramLM
+    import graft.functions.NgramLogProbFp
     val docs = spark.range(0, 300).selectExpr("id AS doc_id",
       """concat('the quick tok', cast(id % 23 AS STRING),
                 ' jumps over tok', cast(id % 7 AS STRING),
@@ -83,10 +87,21 @@ class Round5Spec extends SparkSpec {
     val n2 = UnigramLM.trainNgram(docs, "text", Seq(40, 60))
     val n3 = UnigramLM.trainNgram(docs, "text", Seq(40, 60, 80))
     // identical trained vocabularies…
-    assert(n1.grams.head === uni.vocab && n1.totalTokens === uni.totalTokens)
-    assert(n2.grams(1) === bi.bigrams)
-    assert(n3.grams(2) === tri.trigrams)
-    // …and identical scores from the generalized kernel
+    assert(n1.grams === Seq(uni.vocab) && n1.totalTokens === uni.totalTokens)
+    assert(n2.grams === Seq(bi.unigrams, bi.bigrams) && n2.totalTokens === bi.totalTokens)
+    assert(n3.grams === Seq(tri.unigrams, tri.bigrams, tri.trigrams) &&
+      n3.totalTokens === tri.totalTokens)
+    // …handed to the scorer level by level…
+    def levels(c: org.apache.spark.sql.Column): (Seq[Map[String, Long]], Long) =
+      org.apache.spark.sql.GraftShim.expression(c) match {
+        case e: NgramLogProbFp => (e.grams, e.total)
+        case e => fail(s"not scored by NgramLogProbFp: $e")
+      }
+    val toks = UnigramLM.tokens(col("text"))
+    assert(levels(uni.logProbFp(toks)) === levels(n1.logProbFp(toks)))
+    assert(levels(bi.logProbFp(toks)) === levels(n2.logProbFp(toks)))
+    assert(levels(tri.logProbFp(toks)) === levels(n3.logProbFp(toks)))
+    // …and identical scores
     def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
       df.select("doc_id", "logprob_fp", "n_tok").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted

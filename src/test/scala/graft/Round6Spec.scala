@@ -142,6 +142,13 @@ class Round6Spec extends SparkSpec {
     assert(run("CODEGEN_ONLY") === run("NO_CODEGEN"))
   }
 
+  test("array_intersect_count rejects non-string arrays at analysis") {
+    val df = Seq((Seq(1, 2), Seq(2, 3))).toDF("a", "b")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(graft.functions.VecFunctions.array_intersect_count(col("a"), col("b")))
+    }
+  }
+
   test("connectedComponents: truncated run still yields exactly one label per id") {
     // maxIter=1 on a 10-chain cannot converge (warn path): the non-converged
     // min-agg fallback must still emit ONE label per vertex, labels <= id

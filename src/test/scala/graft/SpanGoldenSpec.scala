@@ -26,7 +26,13 @@ class SpanGoldenSpec extends SparkSpec {
     val df = Seq(
       GoldenDoc("row1", "not empty", None,
         GoldenInner(7.0, Seq("value", "2")),
-        Map("unexpected_property" -> 2))).toDF()
+        Map("unexpected_property" -> 2)),
+      // one row per remaining per-element / per-key span builder
+      GoldenDoc("elemPattern", "x", Some(1), GoldenInner(1.0, Seq("value", "Bad!")), Map()),
+      GoldenDoc("elemLength", "x", Some(1), GoldenInner(1.0, Seq("toolong", "value")), Map()),
+      GoldenDoc("keyPattern", "x", Some(1), GoldenInner(1.0, Seq("value")), Map("Bad-Key" -> 1)),
+      GoldenDoc("keyLength", "x", Some(1), GoldenInner(1.0, Seq("value")),
+        Map("a_very_long_property_name" -> 1))).toDF()
 
     val suite = ConstraintSuite("doc_id", Seq(
       // enum violation at some_inner.inner_value (reference: enum [1,"value"])
@@ -36,14 +42,31 @@ class SpanGoldenSpec extends SparkSpec {
       // additionalProperties: false ⇒ UnknownProperty at unexpected_property
       MapKeysIn("props", Seq("expected_key")),
       // required some_int missing (reference span: empty root)
-      NonNull("some_int")))
+      NonNull("some_int"),
+      ArrayElemPattern("some_inner.inner_values", "^[a-z0-9]+$"),
+      ArrayElemLength("some_inner.inner_values", max = Some(5)),
+      MapKeyPattern("props", "^[a-z_]+$"),
+      MapKeyLength("props", max = Some(20))))
 
     val compiled = suite.compile(df.schema).fold(es => fail(es.map(_.msg).mkString("; ")), identity)
-    val paths = compiled.run(df).violations.select("path").as[String].collect().toSet
+    val vios = compiled.run(df).violations
+    val paths = vios.filter($"doc_id" === "row1").select("path").as[String].collect().toSet
     assert(paths === Set(
       "some_inner.inner_value",
       "some_inner.inner_values.1",
       "props.unexpected_property",
       "some_int"))
+    val spans = vios
+      .filter($"constraint_id".rlike("^(elemPattern|elemLength|mapKeyPattern|mapKeyLength)"))
+      .select("doc_id", "constraint_id", "path", "bound", "actual").as[(String, String, String, String, String)]
+      .collect().toSet
+    assert(spans === Set(
+      ("elemPattern", "elemPattern(some_inner.inner_values)", "some_inner.inner_values.1",
+        "elem pattern ^[a-z0-9]+$", "Bad!"),
+      ("elemLength", "elemLength(some_inner.inner_values)", "some_inner.inner_values.0",
+        "elem length in [0,5]", "toolong"),
+      ("keyPattern", "mapKeyPattern(props)", "props.Bad-Key", "key pattern ^[a-z_]+$", "Bad-Key"),
+      ("keyLength", "mapKeyLength(props)", "props.a_very_long_property_name",
+        "key length in [0,20]", "25")))
   }
 }

@@ -66,6 +66,9 @@ object PlanDump {
         Map("en" -> 0.5, "fr" -> 0.25, "de" -> 0.25)))
     dump("tf-idf top-k (in-row TF kernel, df agg + idf join + bounded window)",
       ops.TextAnalysis.tfidfTopTerms(docs, "text", "doc_id", 3))
+    val (clean, quarantined) = compiled.split(corpus)
+    dump("quarantine split: clean side (codegen'd flags filter, original columns)", clean)
+    dump("quarantine split: quarantined side (inverted filter + violation spans)", quarantined)
     spark.stop()
   }
 }

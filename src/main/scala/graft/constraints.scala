@@ -127,9 +127,8 @@ object Constraints {
 
   /** Array column whose ELEMENTS are PRIMITIVE numerics — the compile-time
     * guard for element-range checks. Deliberately excludes DecimalType (a
-    * NumericType): ArrayAllInRange's getter/codegen reads primitive slots
-    * only, so admitting decimals here would re-open the executor-crash hole
-    * this guard exists to close. */
+    * NumericType), like the kernels' input type `GraftShim.numericArray`:
+    * their `ElemReader` reads primitive slots only. */
   private[graft] def requireNumericArray(schema: StructType, c: String, ctx: String): List[SuiteError] =
     fieldType(schema, c) match {
       case None => List(SuiteError.UnknownColumn(c, ctx))
@@ -181,14 +180,18 @@ object Constraints {
     * integral division (no double round-trip, no half-up decimal rounding
     * that could flip a floor by one ulp between engines), and num·10^6
     * can't overflow a LONG mid-expression. The shared fixed-point-rate
-    * primitive (same contract as perplexityFp / oovProfile). */
+    * primitive (rates in sequential, stats, drift). */
   private[graft] def intDivFp(num: Column, den: Column): Column = {
+    val d38 = DecimalType(38, 0)
+    intDiv(num.cast(d38) * lit(1000000), den.cast(d38)).cast(LongType)
+  }
+
+  /** SQL `num div den`: Catalyst's IntegralDivide, which the Column API
+    * does not expose. */
+  private[graft] def intDiv(num: Column, den: Column): Column = {
     import org.apache.spark.sql.GraftShim
     import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-    val d38 = DecimalType(38, 0)
-    GraftShim.column(new IntegralDivide(
-      GraftShim.expression(num.cast(d38) * lit(1000000)),
-      GraftShim.expression(den.cast(d38)))).cast(LongType)
+    GraftShim.column(new IntegralDivide(GraftShim.expression(num), GraftShim.expression(den)))
   }
 }
 

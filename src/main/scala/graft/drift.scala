@@ -217,16 +217,6 @@ object Drift {
     val nTok = when(t.isNull, 0L).otherwise(size(t).cast(LongType))
     val nOov = when(t.isNull, 0L).otherwise(
       graft.functions.VecFunctions.array_count_out_of_range(t, 0, vocabSize - 1))
-    val d38 = DecimalType(38, 0)
-    // TRUE integral division in the decimal domain (same contract as
-    // perplexityFp: no double round-trip, no half-up decimal rounding that
-    // could flip a floor by one ulp between engines)
-    def intDiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-      import org.apache.spark.sql.GraftShim
-      import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-      GraftShim.column(new IntegralDivide(
-        GraftShim.expression(a), GraftShim.expression(b)))
-    }
     df.groupBy(col(groupCol))
       .agg(
         count(lit(1)).as("n_rows"),
@@ -234,8 +224,7 @@ object Drift {
         sum(nOov).as("n_oov"))
       .withColumn("oov_rate_fp",
         when(col("n_tokens") > 0,
-          intDiv(col("n_oov").cast(d38) * lit(1000000), col("n_tokens").cast(d38))
-            .cast(LongType)))
+          Constraints.intDivFp(col("n_oov"), col("n_tokens"))))
   }
 
   /** Ref-vs-current OOV-rate comparison per group: breach when the rate
@@ -300,16 +289,8 @@ object Drift {
       topK: Int, maxDeltaFp: Long): DataFrame = {
     require(topK > 0, s"tokenUnigramShift: topK must be > 0, got $topK")
     require(maxDeltaFp >= 0, s"tokenUnigramShift: maxDeltaFp must be >= 0, got $maxDeltaFp")
-    val d38 = DecimalType(38, 0)
-    def intDiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-      import org.apache.spark.sql.GraftShim
-      import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-      GraftShim.column(new IntegralDivide(
-        GraftShim.expression(a), GraftShim.expression(b)))
-    }
     def rateFp(cnt: org.apache.spark.sql.Column, total: org.apache.spark.sql.Column) =
-      when(total > 0, intDiv(cnt.cast(d38) * lit(1000000), total.cast(d38)).cast(LongType))
-        .otherwise(lit(0L))
+      when(total > 0, Constraints.intDivFp(cnt, total)).otherwise(lit(0L))
     // ref watchlist: top-K rows of each group's (already-sorted) item array
     val refTop = refProf.select(col(groupCol), col("n_tokens").as("__ref_total"),
         posexplode(col("sketch.items")).as(Seq("__pos", "__it")))

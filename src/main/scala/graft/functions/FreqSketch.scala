@@ -176,9 +176,7 @@ case class TokenFreqSketch(
           s"TokenFreqSketch needs an integral-array child, got $other")
     }
 
-  @transient private lazy val getter = IntGetter.forType(child.dataType)
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
+  @transient private lazy val read = ElemReader(child.dataType)
 
   override def createAggregationBuffer(): TokenFreqSketch.State =
     new TokenFreqSketch.State()
@@ -187,10 +185,11 @@ case class TokenFreqSketch(
     val v = child.eval(input)
     if (v != null) {
       val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val r = read
       val n = arr.numElements()
       var i = 0
       while (i < n) {
-        if (!(mayContainNull && arr.isNullAt(i))) buf.add(getter(arr, i), 1L, capacity)
+        if (!r.isNull(arr, i)) buf.add(r.long(arr, i), 1L, capacity)
         i += 1
       }
     }

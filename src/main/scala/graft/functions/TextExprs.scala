@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -60,7 +59,8 @@ private[functions] object TextTok {
   }
 }
 
-case class RepetitionStats(child: Expression) extends UnaryExpression {
+case class RepetitionStats(child: Expression) extends UnaryKernel {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = RepetitionStats.schema
 
   def compute(s: UTF8String): InternalRow = {
@@ -151,10 +151,6 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
   }
 
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("repStats", this, classOf[RepetitionStats].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -174,7 +170,8 @@ object RepetitionStats {
   * determinism. The in-row aggregation is what keeps TF computation off the
   * shuffle: an explode→groupBy(doc, term) formulation shuffles every token
   * occurrence, this shuffles nothing. */
-case class WordCounts(child: Expression) extends UnaryExpression {
+case class WordCounts(child: Expression) extends UnaryKernel {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("term", StringType, nullable = false),
@@ -196,10 +193,6 @@ case class WordCounts(child: Expression) extends UnaryExpression {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordCounts", this, classOf[WordCounts].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -269,10 +262,11 @@ private[functions] final class NgramTrieNode {
   * per-language reference models. Returns struct(logprob_fp, n_tok). */
 case class NgramLogProbFp(
     child: Expression, grams: Seq[Map[String, Long]], total: Long)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(total > 0, "total token count must be positive")
   require(grams.nonEmpty, "need at least the unigram vocabulary")
   def order: Int = grams.length
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("logprob_fp", LongType, nullable = false),
     StructField("n_tok", LongType, nullable = false)))
@@ -283,10 +277,6 @@ case class NgramLogProbFp(
     scorer.score(a)
   override def nullSafeEval(x: Any): Any =
     compute(x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ngramLp", this, classOf[NgramLogProbFp].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -302,7 +292,8 @@ case class NgramLogProbFp(
 case class NgramLogProbFpBroadcast(
     child: Expression,
     model: org.apache.spark.broadcast.Broadcast[(Seq[Map[String, Long]], Long)])
-    extends UnaryExpression {
+    extends UnaryKernel {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("logprob_fp", LongType, nullable = false),
     StructField("n_tok", LongType, nullable = false)))
@@ -311,10 +302,6 @@ case class NgramLogProbFpBroadcast(
     NgramScorer.cached(model).score(a)
   override def nullSafeEval(x: Any): Any =
     compute(x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ngramLpBc", this, classOf[NgramLogProbFpBroadcast].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -439,7 +426,6 @@ private[graft] object NgramScorer {
 }
 
 object TextFunctions {
-  import org.apache.spark.sql.GraftShim
   def repetition_stats(text: Column): Column =
     GraftShim.column(RepetitionStats(GraftShim.expression(text)))
   def word_counts(text: Column): Column =

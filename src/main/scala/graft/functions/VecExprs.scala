@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -16,104 +15,141 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpretation overhead is per-row. Measured on the LSH pair-scoring
   * stage this is a ~10× win over the HOF formulation (see BENCH notes).
   *
-  * EVERY expression here implements `doGenCode` — one CodegenFallback
-  * expression evicts its whole Project/Filter stage from whole-stage
-  * codegen, so a single interpreted kernel would make every OTHER column in
-  * the signature projection pay interpreted eval too. The simple scalar
-  * kernels (VecDot, ArrayAllInRange) inline a primitive loop; the
-  * buffer-building kernels (shingles, MinHash, token n-grams, …) embed a
-  * reference to the expression and call its `compute` method — the stage
-  * stays compiled, the kernel stays one JVM method, and the only per-row
-  * overhead is a virtual call.
+  * Every kernel is a [[UnaryKernel]] or [[BinaryKernel]]: its per-row work
+  * is ONE Scala method, `compute`, which interpreted eval calls from
+  * `nullSafeEval` and the generated code calls through a reference to the
+  * expression. The host stage stays inside whole-stage codegen (one
+  * CodegenFallback expression evicts its whole Project/Filter stage, so a
+  * single interpreted kernel would make every OTHER column of the
+  * projection pay interpreted eval too), the kernel is written once, and
+  * the only per-row overhead is a virtual call. Numeric-array kernels read
+  * elements through the one [[ElemReader]].
   *
   * All are deterministic pure functions — safe anywhere in the plan.
   */
 
+/** Base of the one-input kernels (see the file header): subclasses define
+  * `compute(input)`, `nullSafeEval` calling it, and `inputTypes`, so a
+  * mis-typed input fails at analysis instead of inside a task. */
+abstract class UnaryKernel extends UnaryExpression with ExpectsInputTypes {
+  /** True when `compute` can return null for a non-null input; it then
+    * returns its result boxed. */
+  protected def computeMayBeNull: Boolean = false
+  override def nullable: Boolean = computeMayBeNull || child.nullable
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => Kernel.callCompute(ctx, ev, this, computeMayBeNull, a))
+}
 
-object VecGetter {
-  /** Java literal for a double bound embedded in generated code. */
-  def jlit(d: Double): String =
-    if (d == Double.NegativeInfinity) "Double.NEGATIVE_INFINITY"
-    else if (d == Double.PositiveInfinity) "Double.POSITIVE_INFINITY"
-    else if (d.isNaN) "Double.NaN"
-    else s"${d}D"
+/** Two-input form of [[UnaryKernel]]. */
+abstract class BinaryKernel extends BinaryExpression with ExpectsInputTypes {
+  protected def computeMayBeNull: Boolean = false
+  override def nullable: Boolean = computeMayBeNull || left.nullable || right.nullable
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => Kernel.callCompute(ctx, ev, this, computeMayBeNull, a, b))
+}
 
-  /** Element-type-aware numeric reader — VecDot/VecNorm/SignLshBands accept
-    * any numeric array (float embeddings, double-typed derived columns). */
-  def forType(dt: DataType): (ArrayData, Int) => Double = dt match {
-    case ArrayType(FloatType, _) => (a, i) => a.getFloat(i).toDouble
-    case ArrayType(DoubleType, _) => (a, i) => a.getDouble(i)
-    case ArrayType(IntegerType, _) => (a, i) => a.getInt(i).toDouble
-    case ArrayType(LongType, _) => (a, i) => a.getLong(i).toDouble
-    case ArrayType(ShortType, _) => (a, i) => a.getShort(i).toDouble
-    case ArrayType(ByteType, _) => (a, i) => a.getByte(i).toDouble
-    case other => throw new IllegalArgumentException(s"non-numeric array: $other")
+private[functions] object Kernel {
+  /** Generated Java for `ev = kernel.compute(args)`; a boxed result sets
+    * `ev.isNull` when it is null. */
+  def callCompute(ctx: CodegenContext, ev: ExprCode, kernel: Expression,
+      mayBeNull: Boolean, args: String*): String = {
+    val ref = ctx.addReferenceObj(kernel.nodeName, kernel, kernel.getClass.getName)
+    val call = s"$ref.compute(${args.mkString(", ")})"
+    if (!mayBeNull) s"${ev.value} = $call;"
+    else {
+      val boxedType = CodeGenerator.boxedType(kernel.dataType)
+      val boxed = s"${ev.value}Boxed"
+      s"""final $boxedType $boxed = ($boxedType) $call;
+         |${ev.isNull} = $boxed == null;
+         |if (!${ev.isNull}) ${ev.value} = $boxed;""".stripMargin
+    }
   }
+}
+
+/** The one element reader of the numeric-array kernels: slot `i` of a
+  * primitive numeric array as a double or as a long. The element-type
+  * dispatch runs once, when a kernel builds its reader; every read is then
+  * a virtual call returning a primitive (no closure, no boxing), and the
+  * null-slot test is skipped when the array type admits no null elements. */
+abstract class ElemReader(containsNull: Boolean) {
+  def double(a: ArrayData, i: Int): Double
+  /** Integral arrays only: the integral kernels declare integral inputs. */
+  def long(a: ArrayData, i: Int): Long
+  final def isNull(a: ArrayData, i: Int): Boolean = containsNull && a.isNullAt(i)
+  /** Slot `i` is non-null and within the closed range [lo, hi]; false for
+    * NaN, which fails both comparisons. */
+  final def inRange(a: ArrayData, i: Int, lo: Double, hi: Double): Boolean =
+    !isNull(a, i) && { val v = double(a, i); v >= lo && v <= hi }
+  /** Slot `i` is non-null and equals `t` (exact integral equality). */
+  final def equalsAt(a: ArrayData, i: Int, t: Long): Boolean =
+    !isNull(a, i) && long(a, i) == t
+}
+
+object ElemReader {
+  def apply(arrayType: DataType): ElemReader = arrayType match {
+    case ArrayType(ByteType, n) => new ElemReader(n) {
+      def double(a: ArrayData, i: Int) = a.getByte(i).toDouble
+      def long(a: ArrayData, i: Int) = a.getByte(i).toLong }
+    case ArrayType(ShortType, n) => new ElemReader(n) {
+      def double(a: ArrayData, i: Int) = a.getShort(i).toDouble
+      def long(a: ArrayData, i: Int) = a.getShort(i).toLong }
+    case ArrayType(IntegerType, n) => new ElemReader(n) {
+      def double(a: ArrayData, i: Int) = a.getInt(i).toDouble
+      def long(a: ArrayData, i: Int) = a.getInt(i).toLong }
+    case ArrayType(LongType, n) => new ElemReader(n) {
+      def double(a: ArrayData, i: Int) = a.getLong(i).toDouble
+      def long(a: ArrayData, i: Int) = a.getLong(i) }
+    case ArrayType(FloatType, n) => new ElemReader(n) {
+      def double(a: ArrayData, i: Int) = a.getFloat(i).toDouble
+      def long(a: ArrayData, i: Int) = notIntegral(arrayType) }
+    case ArrayType(DoubleType, n) => new ElemReader(n) {
+      def double(a: ArrayData, i: Int) = a.getDouble(i)
+      def long(a: ArrayData, i: Int) = notIntegral(arrayType) }
+    case other => throw new IllegalArgumentException(s"not a primitive numeric array: $other")
+  }
+  private def notIntegral(dt: DataType): Long =
+    throw new IllegalStateException(s"integral read of $dt")
 }
 
 /** dot(a, b) over two numeric arrays, accumulated in double. Mismatched
   * lengths (ragged embeddings) yield NULL — a truncated dot would be a
-  * plausible but WRONG score; enforce equal dims upstream or filter nulls.
-  * Implements `doGenCode`, so the scoring stage stays inside whole-stage
-  * codegen with a primitive loop (no per-row boxing). */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
+  * plausible but WRONG score; enforce equal dims upstream or filter nulls. */
+case class VecDot(left: Expression, right: Expression) extends BinaryKernel {
+  override def inputTypes = Seq(GraftShim.numericArray, GraftShim.numericArray)
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  @transient private lazy val getL = VecGetter.forType(left.dataType)
-  @transient private lazy val getR = VecGetter.forType(right.dataType)
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def computeMayBeNull: Boolean = true
+  @transient private lazy val readL = ElemReader(left.dataType)
+  @transient private lazy val readR = ElemReader(right.dataType)
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
+    val rx = readL
+    val ry = readR
     var s = 0.0
     var i = 0
-    while (i < n) { s += getL(x, i) * getR(y, i); i += 1 }
+    while (i < n) { s += rx.double(x, i) * ry.double(y, i); i += 1 }
     s
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val getA = CodeGenerator.getValue(a, left.dataType.asInstanceOf[ArrayType].elementType, i)
-      val getB = CodeGenerator.getValue(b, right.dataType.asInstanceOf[ArrayType].elementType, i)
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += (double)($getA) * (double)($getB);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
 
-/** sqrt(dot(a, a)). `doGenCode` keeps the host stage inside whole-stage
-  * codegen (one interpreted expression evicts the WHOLE stage); the kernel
-  * itself runs as one JVM method via an embedded reference — same loop, no
-  * per-row boxing beyond the ArrayData handle. */
-case class VecNorm(child: Expression) extends UnaryExpression {
+/** sqrt(dot(a, a)). */
+case class VecNorm(child: Expression) extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.numericArray)
   override def dataType: DataType = DoubleType
-  @transient private lazy val get = VecGetter.forType(child.dataType)
+  @transient private lazy val read = ElemReader(child.dataType)
   def compute(x: ArrayData): Double = {
+    val r = read
     var s = 0.0
     var i = 0
     val n = x.numElements()
-    while (i < n) { val v = get(x, i); s += v * v; i += 1 }
+    while (i < n) { val v = r.double(x, i); s += v * v; i += 1 }
     math.sqrt(s)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("vecNorm", this, classOf[VecNorm].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -138,9 +174,9 @@ object HashMix {
 /** MinHash signature: array<long> of `numHashes` slots; slot j =
   * min over shingles of mix(base_hash ^ seed_j). One base hash per shingle,
   * `numHashes` mixes per shingle — the classic one-hash + derived-permutation
-  * scheme. */
-case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+  * scheme. Null shingles are skipped. */
+case class MinHashSig(child: Expression, numHashes: Int) extends UnaryKernel {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   private val seeds: Array[Long] =
     Array.tabulate(numHashes)(j => HashMix.mix(0x9e3779b97f4a7c15L * (j + 1)))
@@ -149,39 +185,40 @@ case class MinHashSig(child: Expression, numHashes: Int)
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < n) {
-      val base = HashMix.hashUtf8(arr.getUTF8String(i))
-      var j = 0
-      while (j < numHashes) {
-        val h = HashMix.mix(base ^ seeds(j))
-        if (h < mins(j)) mins(j) = h
-        j += 1
+      if (!arr.isNullAt(i)) {
+        val base = HashMix.hashUtf8(arr.getUTF8String(i))
+        var j = 0
+        while (j < numHashes) {
+          val h = HashMix.mix(base ^ seeds(j))
+          if (h < mins(j)) mins(j) = h
+          j += 1
+        }
       }
       i += 1
     }
     new GenericArrayData(mins)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minHashSig", this, classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** SimHash64 over string shingles: bit i of the result is the sign of the
-  * shingle-count-weighted sum of hash bit i. */
-case class SimHash64(child: Expression) extends UnaryExpression {
+  * shingle-count-weighted sum of hash bit i. Null shingles are skipped. */
+case class SimHash64(child: Expression) extends UnaryKernel {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
   def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
     val counters = new Array[Int](64)
     var i = 0
     while (i < n) {
-      val h = HashMix.mix(HashMix.hashUtf8(arr.getUTF8String(i)))
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
-        b += 1
+      if (!arr.isNullAt(i)) {
+        val h = HashMix.mix(HashMix.hashUtf8(arr.getUTF8String(i)))
+        var b = 0
+        while (b < 64) {
+          if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
+          b += 1
+        }
       }
       i += 1
     }
@@ -191,10 +228,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     sig
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simHash", this, classOf[SimHash64].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -203,15 +236,15 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * hyperplane dots. Hyperplane weights derive from mix(plane, dim) — no
   * driver-side randomness, reproducible at any parallelism. */
 case class SignLshBands(child: Expression, bands: Int, planesPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.numericArray)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  @transient private lazy val planes = bands * planesPerBand
-  // weight(p, d) ∈ {-2,-1,0,1,2}; materialized lazily per executor for the
-  // dims seen (cache rows are tiny: planes × dim longs)
+  // weight(p, d) ∈ {-2,-1,0,1,2}
   @inline private def weight(p: Int, d: Int): Double =
     (java.lang.Math.floorMod(HashMix.mix((p.toLong << 32) | (d & 0xffffffffL)), 5L) - 2L).toDouble
-  @transient private lazy val get = VecGetter.forType(child.dataType)
+  @transient private lazy val read = ElemReader(child.dataType)
   def compute(x: ArrayData): ArrayData = {
+    val r = read
     val dim = x.numElements()
     val out = new Array[Long](bands)
     var b = 0
@@ -222,7 +255,7 @@ case class SignLshBands(child: Expression, bands: Int, planesPerBand: Int)
         val p = b * planesPerBand + j
         var s = 0.0
         var d = 0
-        while (d < dim) { s += get(x, d) * weight(p, d); d += 1 }
+        while (d < dim) { s += r.double(x, d) * weight(p, d); d += 1 }
         if (s > 0) v |= (1L << j)
         j += 1
       }
@@ -232,68 +265,29 @@ case class SignLshBands(child: Expression, bands: Int, planesPerBand: Int)
     new GenericArrayData(out)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("signLsh", this, classOf[SignLshBands].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** All numeric array elements within [lo, hi] — the hot token-domain
   * predicate. One JVM loop per row with early exit; `forall(...)` would pay
-  * per-element lambda interpretation on every token of every row. Implements
-  * `doGenCode`: the S1 scan projection keeps this check as a primitive loop
-  * inside whole-stage codegen instead of an interpreted-eval island. */
-case class ArrayAllInRange(child: Expression, lo: Double, hi: Double)
-    extends UnaryExpression {
+  * per-element lambda interpretation on every token of every row. A null or
+  * NaN element is out of range ([[ElemReader.inRange]], the same test as
+  * [[ArrayCountOutOfRange]]). */
+case class ArrayAllInRange(child: Expression, lo: Double, hi: Double) extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.numericArray)
   override def dataType: DataType = BooleanType
-  @transient private lazy val getter: (ArrayData, Int) => Double =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case LongType => (a, i) => a.getLong(i).toDouble
-      case ShortType => (a, i) => a.getShort(i).toDouble
-      case FloatType => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case ByteType => (a, i) => a.getByte(i).toDouble
-      case other => throw new IllegalStateException(s"non-numeric array: $other")
-    }
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  @transient private lazy val read = ElemReader(child.dataType)
+  def compute(x: ArrayData): Boolean = {
+    val r = read
     val n = x.numElements()
     var i = 0
     while (i < n) {
-      if (mayContainNull && x.isNullAt(i)) return false
-      val v = getter(x, i)
-      if (v < lo || v > hi) return false
+      if (!r.inRange(x, i, lo, hi)) return false
       i += 1
     }
     true
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val at = child.dataType.asInstanceOf[ArrayType]
-      val getV = CodeGenerator.getValue(arr, at.elementType, i)
-      val nullElem =
-        if (at.containsNull) s"if ($arr.isNullAt($i)) { ${ev.value} = false; break; }"
-        else ""
-      s"""
-         |final int $n = $arr.numElements();
-         |${ev.value} = true;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullElem
-         |  final double $v = (double)($getV);
-         |  if ($v < ${VecGetter.jlit(lo)} || $v > ${VecGetter.jlit(hi)}) {
-         |    ${ev.value} = false;
-         |    break;
-         |  }
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -301,119 +295,54 @@ case class ArrayAllInRange(child: Expression, lo: Double, hi: Double)
   * quantified companion to [[ArrayAllInRange]] (which short-circuits on the
   * first offender and so can't measure HOW out-of-domain a corpus is). A
   * null ELEMENT counts as out-of-range (an invalid token, not an absent
-  * one), and so does a NaN element in float/double arrays (`v < lo || v >
-  * hi` is vacuously false for NaN — without the explicit test a NaN would
-  * silently count as in-vocab, the one invalid-token case the null stance
-  * already rejects); a null ARRAY is null (leaf null-stance — assert
-  * presence with NonNull). Backs per-group OOV-rate drift over token
-  * arrays: one codegen'd pass per row, no explode, no HOF lambda. */
+  * one), and so does a NaN element in float/double arrays (the in-range
+  * test `v >= lo && v <= hi` is false for NaN, so a NaN never passes as
+  * in-vocab); a null ARRAY is null (leaf null-stance — assert presence
+  * with NonNull). Backs per-group OOV-rate drift over token arrays: one
+  * codegen'd pass per row, no explode, no HOF lambda. */
 case class ArrayCountOutOfRange(child: Expression, lo: Double, hi: Double)
-    extends UnaryExpression {
+    extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.numericArray)
   override def dataType: DataType = LongType
-  @transient private lazy val getter: (ArrayData, Int) => Double =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case LongType => (a, i) => a.getLong(i).toDouble
-      case ShortType => (a, i) => a.getShort(i).toDouble
-      case FloatType => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case ByteType => (a, i) => a.getByte(i).toDouble
-      case other => throw new IllegalStateException(s"non-numeric array: $other")
-    }
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  @transient private lazy val read = ElemReader(child.dataType)
+  def compute(x: ArrayData): Long = {
+    val r = read
     val n = x.numElements()
     var bad = 0L
     var i = 0
     while (i < n) {
-      if (mayContainNull && x.isNullAt(i)) bad += 1
-      else {
-        val v = getter(x, i)
-        if (v < lo || v > hi || java.lang.Double.isNaN(v)) bad += 1
-      }
+      if (!r.inRange(x, i, lo, hi)) bad += 1
       i += 1
     }
     bad
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val at = child.dataType.asInstanceOf[ArrayType]
-      val getV = CodeGenerator.getValue(arr, at.elementType, i)
-      val body =
-        if (at.containsNull)
-          s"""if ($arr.isNullAt($i)) { ${ev.value}++; }
-             |else {
-             |  final double $v = (double)($getV);
-             |  if ($v < ${VecGetter.jlit(lo)} || $v > ${VecGetter.jlit(hi)} || Double.isNaN($v)) ${ev.value}++;
-             |}""".stripMargin
-        else
-          s"""final double $v = (double)($getV);
-             |if ($v < ${VecGetter.jlit(lo)} || $v > ${VecGetter.jlit(hi)} || Double.isNaN($v)) ${ev.value}++;""".stripMargin
-      s"""
-         |final int $n = $arr.numElements();
-         |${ev.value} = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $body
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Integral-element reader shared by the pad-layout kernels: tokens are
-  * discrete symbols, so equality is exact long comparison — float arrays are
-  * rejected at selfCheck time (== on floats is a footgun, not a layout). */
-object IntGetter {
-  def forType(dt: DataType): (ArrayData, Int) => Long = dt match {
-    case ArrayType(IntegerType, _) => (a, i) => a.getInt(i).toLong
-    case ArrayType(LongType, _) => (a, i) => a.getLong(i)
-    case ArrayType(ShortType, _) => (a, i) => a.getShort(i).toLong
-    case ArrayType(ByteType, _) => (a, i) => a.getByte(i).toLong
-    case other => throw new IllegalArgumentException(s"non-integral array: $other")
-  }
 }
 
 /** COUNT of array elements equal to `target` (exact integral equality) —
   * the pad counter behind pad-aware length checks: non-pad count =
   * size(arr) - ArrayCountEq(arr, pad), computed without materializing an
   * `array_remove` copy of an 8k-token array per row. A null ELEMENT never
-  * equals anything; a null ARRAY is null (leaf null-stance). */
-case class ArrayCountEq(child: Expression, target: Long) extends UnaryExpression {
+  * equals anything; a null ARRAY is null (leaf null-stance). Tokens are
+  * discrete symbols, so the pad-layout kernels take integral arrays only
+  * (== on floats is a footgun, not a layout). */
+case class ArrayCountEq(child: Expression, target: Long) extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.integralArray)
   override def dataType: DataType = LongType
-  @transient private lazy val getter = IntGetter.forType(child.dataType)
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  @transient private lazy val read = ElemReader(child.dataType)
+  def compute(x: ArrayData): Long = {
+    val r = read
     val n = x.numElements()
     var eq = 0L
     var i = 0
     while (i < n) {
-      if (!(mayContainNull && x.isNullAt(i)) && getter(x, i) == target) eq += 1
+      if (r.equalsAt(x, i, target)) eq += 1
       i += 1
     }
     eq
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val at = child.dataType.asInstanceOf[ArrayType]
-      val getV = CodeGenerator.getValue(arr, at.elementType, i)
-      val guard = if (at.containsNull) s"!$arr.isNullAt($i) && " else ""
-      s"""
-         |final int $n = $arr.numElements();
-         |${ev.value} = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($guard(long)($getV) == ${target}L) ${ev.value}++;
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -423,44 +352,23 @@ case class ArrayCountEq(child: Expression, target: Long) extends UnaryExpression
   * ELEMENT counts as non-pad (corruption after padding began is a layout
   * violation, not an absent slot); empty and all-pad arrays are trivially
   * ok. One forward pass, no allocation. */
-case class ArrayPadSuffixOk(child: Expression, pad: Long) extends UnaryExpression {
+case class ArrayPadSuffixOk(child: Expression, pad: Long) extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.integralArray)
   override def dataType: DataType = BooleanType
-  @transient private lazy val getter = IntGetter.forType(child.dataType)
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  @transient private lazy val read = ElemReader(child.dataType)
+  def compute(x: ArrayData): Boolean = {
+    val r = read
     val n = x.numElements()
     var seenPad = false
     var i = 0
     while (i < n) {
-      val isPad = !(mayContainNull && x.isNullAt(i)) && getter(x, i) == pad
-      if (isPad) seenPad = true
+      if (r.equalsAt(x, i, pad)) seenPad = true
       else if (seenPad) return false
       i += 1
     }
     true
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val seen = ctx.freshName("seenPad")
-      val isPad = ctx.freshName("isPad")
-      val at = child.dataType.asInstanceOf[ArrayType]
-      val getV = CodeGenerator.getValue(arr, at.elementType, i)
-      val guard = if (at.containsNull) s"!$arr.isNullAt($i) && " else ""
-      s"""
-         |final int $n = $arr.numElements();
-         |boolean $seen = false;
-         |${ev.value} = true;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final boolean $isPad = $guard(long)($getV) == ${pad}L;
-         |  if ($isPad) { $seen = true; }
-         |  else if ($seen) { ${ev.value} = false; break; }
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -475,19 +383,18 @@ case class ArrayPadSuffixOk(child: Expression, pad: Long) extends UnaryExpressio
   * whole array. Null elements count as ordinary tokens (their validity is
   * elemRange's job). One forward pass, no allocation. */
 case class ArrayBadSegmentCount(child: Expression, sep: Long, minLen: Long, maxLen: Long)
-    extends UnaryExpression {
+    extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.integralArray)
   override def dataType: DataType = LongType
-  @transient private lazy val getter = IntGetter.forType(child.dataType)
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  @transient private lazy val read = ElemReader(child.dataType)
+  def compute(x: ArrayData): Long = {
+    val r = read
     val n = x.numElements()
     var bad = 0L
     var prev = -1 // index of the last separator seen
     var i = 0
     while (i < n) {
-      if (!(mayContainNull && x.isNullAt(i)) && getter(x, i) == sep) {
+      if (r.equalsAt(x, i, sep)) {
         val segLen = i - prev - 1
         if (segLen < minLen || segLen > maxLen) bad += 1
         prev = i
@@ -498,31 +405,7 @@ case class ArrayBadSegmentCount(child: Expression, sep: Long, minLen: Long, maxL
     if (trailing > 0 && (trailing < minLen || trailing > maxLen)) bad += 1
     bad
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val prev = ctx.freshName("prevSep")
-      val seg = ctx.freshName("segLen")
-      val trail = ctx.freshName("trailing")
-      val at = child.dataType.asInstanceOf[ArrayType]
-      val getV = CodeGenerator.getValue(arr, at.elementType, i)
-      val guard = if (at.containsNull) s"!$arr.isNullAt($i) && " else ""
-      s"""
-         |final int $n = $arr.numElements();
-         |int $prev = -1;
-         |${ev.value} = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($guard(long)($getV) == ${sep}L) {
-         |    final int $seg = $i - $prev - 1;
-         |    if ($seg < ${minLen}L || $seg > ${maxLen}L) ${ev.value}++;
-         |    $prev = $i;
-         |  }
-         |}
-         |final int $trail = $n - $prev - 1;
-         |if ($trail > 0 && ($trail < ${minLen}L || $trail > ${maxLen}L)) ${ev.value}++;
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -531,46 +414,26 @@ case class ArrayBadSegmentCount(child: Expression, sep: Long, minLen: Long, maxL
   * NULL when the array is null, empty, all-pad, or all-null: there is no
   * last real token to report (EOS checks coalesce that to a violation).
   * Null elements are skipped here — their validity is elemRange's job. */
-case class ArrayLastNotEq(child: Expression, skip: Long) extends UnaryExpression {
+case class ArrayLastNotEq(child: Expression, skip: Long) extends UnaryKernel {
+  override def inputTypes = Seq(GraftShim.integralArray)
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  @transient private lazy val getter = IntGetter.forType(child.dataType)
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override protected def computeMayBeNull: Boolean = true
+  @transient private lazy val read = ElemReader(child.dataType)
+  def compute(x: ArrayData): java.lang.Long = {
+    val r = read
     // backward scan: the common case (well-formed padded row) finds the
     // last real token within the pad-suffix length, not O(n) from the front
     var i = x.numElements() - 1
     while (i >= 0) {
-      if (!(mayContainNull && x.isNullAt(i))) {
-        val v = getter(x, i)
+      if (!r.isNull(x, i)) {
+        val v = r.long(x, i)
         if (v != skip) return v
       }
       i -= 1
     }
     null
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val found = ctx.freshName("found")
-      val at = child.dataType.asInstanceOf[ArrayType]
-      val getV = CodeGenerator.getValue(arr, at.elementType, i)
-      val guard = if (at.containsNull) s"!$arr.isNullAt($i) && " else ""
-      s"""
-         |boolean $found = false;
-         |${ev.value} = 0L;
-         |for (int $i = $arr.numElements() - 1; $i >= 0 && !$found; $i--) {
-         |  if ($guard true) {
-         |    final long $v = (long)($getV);
-         |    if ($v != ${skip}L) { ${ev.value} = $v; $found = true; }
-         |  }
-         |}
-         |${ev.isNull} = !$found;
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -579,7 +442,8 @@ case class ArrayLastNotEq(child: Expression, skip: Long) extends UnaryExpression
   * joined by single spaces. Replaces a 5-op HOF pipeline
   * (regexp_replace→split→filter→transform/slice/array_join→distinct), each
   * stage of which re-walks the text with interpreted lambdas. */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int) extends UnaryKernel {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   def compute(s: UTF8String): ArrayData = {
     val text = s.toString
@@ -611,10 +475,6 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
     new GenericArrayData(arr)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordShingles", this, classOf[WordShingles].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -622,34 +482,20 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
   * agreement (estimated Jaccard numerator). Mismatched lengths yield NULL
   * (signatures are fixed-width by construction; a mismatch means corrupt
   * input, not "compare the shorter prefix"). */
-case class LongArrayEqCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class LongArrayEqCount(left: Expression, right: Expression) extends BinaryKernel {
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  /** Caller guarantees equal lengths (the null case is handled outside). */
-  def compute(x: ArrayData, y: ArrayData): Int = {
+  override protected def computeMayBeNull: Boolean = true
+  def compute(x: ArrayData, y: ArrayData): java.lang.Integer = {
     val n = x.numElements()
+    if (n != y.numElements()) return null
     var c = 0
     var i = 0
     while (i < n) { if (x.getLong(i) == y.getLong(i)) c += 1; i += 1 }
     c
   }
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) null else compute(x, y)
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("eqCount", this, classOf[LongArrayEqCount].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $ref.compute($a, $b);
-         |}
-       """.stripMargin)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -660,12 +506,10 @@ case class LongArrayEqCount(left: Expression, right: Expression)
   * intersection ARRAY: the Jaccard verification stages only ever read the
   * intersection's SIZE, and `array_intersect` + `size` built (then threw
   * away) an O(|a∩b|) string array per scored pair. One hash-set build per
-  * side, a counter, zero per-pair output allocation. Non-string arrays
-  * fail at analysis (`compute` reads every element as a UTF8String). */
+  * side, a counter, zero per-pair output allocation. */
 case class StringArrayIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes =
-    Seq(ArrayType(StringType), ArrayType(StringType))
+    extends BinaryKernel {
+  override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
   override def dataType: DataType = IntegerType
   def compute(a: ArrayData, b: ArrayData): Int = {
     val nb = b.numElements()
@@ -698,11 +542,6 @@ case class StringArrayIntersectCount(left: Expression, right: Expression)
   }
   override def nullSafeEval(a: Any, b: Any): Any =
     compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ixCount", this,
-      classOf[StringArrayIntersectCount].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -714,15 +553,13 @@ case class StringArrayIntersectCount(left: Expression, right: Expression)
   * string per window). 64-bit space makes cross-window collisions
   * negligible at 10^12-sequence scale (birthday bound ≈ 2^-20 per 10^6
   * distinct spans). */
-case class TokenNgramHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+case class TokenNgramHashes(child: Expression, n: Int) extends UnaryKernel {
   require(n > 0, "n > 0")
+  override def inputTypes = Seq(GraftShim.integralArray)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  @transient private lazy val get: (ArrayData, Int) => Long =
-    IntGetter.forType(child.dataType)
-  @transient private lazy val mayContainNull =
-    child.dataType.asInstanceOf[ArrayType].containsNull
+  @transient private lazy val read = ElemReader(child.dataType)
   def compute(x: ArrayData): ArrayData = {
+    val r = read
     val len = x.numElements()
     if (len < n) return new GenericArrayData(Array.empty[Long])
     val out = new java.util.LinkedHashSet[java.lang.Long]()
@@ -735,8 +572,8 @@ case class TokenNgramHashes(child: Expression, n: Int)
       var ok = true
       var j = 0
       while (ok && j < n) {
-        if (mayContainNull && x.isNullAt(i + j)) ok = false
-        else { h = (h ^ get(x, i + j)) * 0x100000001b3L; j += 1 }
+        if (r.isNull(x, i + j)) ok = false
+        else { h = (h ^ r.long(x, i + j)) * 0x100000001b3L; j += 1 }
       }
       if (ok) out.add(HashMix.mix(h))
       i += 1
@@ -748,10 +585,6 @@ case class TokenNgramHashes(child: Expression, n: Int)
     new GenericArrayData(arr)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenNgrams", this, classOf[TokenNgramHashes].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -760,11 +593,13 @@ case class TokenNgramHashes(child: Expression, n: Int)
   * are the trained model, nlist×dim doubles — a few KB), so assignment is one
   * narrow codegen-stage-friendly pass with no join. */
 case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(centroids.nonEmpty, "NearestCentroid requires >= 1 centroid")
+  override def inputTypes = Seq(GraftShim.numericArray)
   override def dataType: DataType = IntegerType
-  @transient private lazy val get = VecGetter.forType(child.dataType)
+  @transient private lazy val read = ElemReader(child.dataType)
   def compute(x: ArrayData): Int = {
+    val r = read
     val dim = x.numElements()
     var best = 0
     var bestD = Double.MaxValue
@@ -774,17 +609,13 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
       val n = math.min(dim, cent.length)
       var d = 0.0
       var i = 0
-      while (i < n) { val t = get(x, i) - cent(i); d += t * t; i += 1 }
+      while (i < n) { val t = r.double(x, i) - cent(i); d += t * t; i += 1 }
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     best
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestCentroid", this, classOf[NearestCentroid].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -795,12 +626,14 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
   * round-trip per query. Centroids ride inside the expression (nlist×dim
   * doubles — KBs). */
 case class NearestCentroids(child: Expression, centroids: Array[Array[Double]], nprobe: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(centroids.nonEmpty, "NearestCentroids requires >= 1 centroid")
   require(nprobe >= 1, "nprobe >= 1")
+  override def inputTypes = Seq(GraftShim.numericArray)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  @transient private lazy val get = VecGetter.forType(child.dataType)
+  @transient private lazy val read = ElemReader(child.dataType)
   def compute(x: ArrayData): ArrayData = {
+    val r = read
     val dim = x.numElements()
     val n = centroids.length
     val d = new Array[Double](n)
@@ -810,7 +643,7 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]], 
       val m = math.min(dim, cent.length)
       var s = 0.0
       var i = 0
-      while (i < m) { val t = get(x, i) - cent(i); s += t * t; i += 1 }
+      while (i < m) { val t = r.double(x, i) - cent(i); s += t * t; i += 1 }
       d(c) = s
       c += 1
     }
@@ -819,16 +652,11 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]], 
     new GenericArrayData(idx)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestCentroids", this, classOf[NearestCentroids].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** Column wrappers. */
 object VecFunctions {
-  import org.apache.spark.sql.GraftShim
   private def c(e: Expression): Column = GraftShim.column(e)
   private def e(col: Column): Expression = GraftShim.expression(col)
 

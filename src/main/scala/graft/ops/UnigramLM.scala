@@ -248,12 +248,8 @@ object UnigramLM {
     * `//`), not a double round-trip — a quotient within 1 ulp of an
     * integer must not flip a bucket between engines. Rows with
     * `n_tok = 0` yield null (filter them before bucketing). */
-  def perplexityFp(logprobFpCol: Column, nTokCol: Column): Column = {
-    import org.apache.spark.sql.GraftShim
-    import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-    GraftShim.column(new IntegralDivide(
-      GraftShim.expression(-logprobFpCol), GraftShim.expression(nTokCol)))
-  }
+  def perplexityFp(logprobFpCol: Column, nTokCol: Column): Column =
+    graft.Constraints.intDiv(-logprobFpCol, nTokCol)
 
   private def bucketize(scored: DataFrame, pplCol: String,
       tHead: Long, tMid: Long): DataFrame =

@@ -57,13 +57,6 @@ object Stats {
   def padWasteProfile(df: DataFrame, tokensCol: String, groupCol: String,
       pad: Long): DataFrame = {
     val t = col(tokensCol)
-    val d38 = DecimalType(38, 0)
-    def intDiv(a: Column, b: Column) = {
-      import org.apache.spark.sql.GraftShim
-      import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-      GraftShim.column(new IntegralDivide(
-        GraftShim.expression(a), GraftShim.expression(b)))
-    }
     df.groupBy(col(groupCol)).agg(
         count(lit(1)).as("n_rows"),
         sum(when(t.isNull, 0L).otherwise(size(t).cast(LongType))).as("n_tokens"),
@@ -71,8 +64,7 @@ object Stats {
           graft.functions.VecFunctions.array_count_eq(t, pad))).as("n_pad"))
       .withColumn("waste_fp",
         when(col("n_tokens") > 0,
-          intDiv(col("n_pad").cast(d38) * lit(1000000), col("n_tokens").cast(d38))
-            .cast(LongType)).otherwise(lit(0L)))
+          Constraints.intDivFp(col("n_pad"), col("n_tokens"))).otherwise(lit(0L)))
   }
 
   def topKWorstBuckets(report: DataFrame, k: Int): DataFrame =

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
   * fixes (FreqSketch >64KB values, ArrayCountOutOfRange NaN stance,
   * SuiteRepo append race) and result-identity guards for the optimized
   * operator internals (CC losers/report derivation, scorePairs size
-  * prefilter, bucketing cache release). */
+  * prefilter, bucketing cache release). The NaN test's interpreted leg
+  * runs `nullSafeEval` (NO_CODEGEN on an RDD input); KernelSpec holds the
+  * interpreted-vs-compiled parity of every kernel. */
 class Round6Spec extends SparkSpec {
   import spark.implicits._
 
@@ -23,17 +25,24 @@ class Round6Spec extends SparkSpec {
   }
 
   test("ArrayCountOutOfRange counts NaN as out-of-range (eval + codegen agree)") {
-    val df = Seq(
+    // an RDD input, not a local Seq: the optimizer would evaluate a
+    // projection over a LocalRelation itself, interpreted, in both legs
+    val df = spark.sparkContext.parallelize(Seq(
       (1L, Seq(0.1, 0.2, Double.NaN)),
       (2L, Seq(Double.NaN, Double.NaN)),
-      (3L, Seq(0.1, 0.5))).toDF("id", "xs")
+      (3L, Seq(0.1, 0.5)))).toDF("id", "xs")
     val counted = df.select(col("id"),
       graft.functions.VecFunctions.array_count_out_of_range(col("xs"), 0.0, 1.0).as("bad"))
     val want = Map(1L -> 1L, 2L -> 2L, 3L -> 0L)
-    // interpreted path
+    // interpreted path: without NO_CODEGEN the non-whole-stage projection
+    // is still compiled and nullSafeEval never runs
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try assert(counted.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === want)
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
     // codegen path
     assert(counted.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === want)
   }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   */
 case class GoldenInner(inner_value: Double, inner_values: Seq[String])
 case class GoldenDoc(doc_id: String, some_str: String, some_int: Option[Int],
-    some_inner: GoldenInner, props: Map[String, Int])
+    some_inner: GoldenInner, props: Map[String, Int], v: Seq[Double] = Seq(1.0))
 
 class SpanGoldenSpec extends SparkSpec {
   import spark.implicits._
@@ -32,7 +32,10 @@ class SpanGoldenSpec extends SparkSpec {
       GoldenDoc("elemLength", "x", Some(1), GoldenInner(1.0, Seq("toolong", "value")), Map()),
       GoldenDoc("keyPattern", "x", Some(1), GoldenInner(1.0, Seq("value")), Map("Bad-Key" -> 1)),
       GoldenDoc("keyLength", "x", Some(1), GoldenInner(1.0, Seq("value")),
-        Map("a_very_long_property_name" -> 1))).toDF()
+        Map("a_very_long_property_name" -> 1)),
+      // NaN is outside every range: the gate and the span builder agree
+      GoldenDoc("elemNaN", "x", Some(1), GoldenInner(1.0, Seq("value")), Map(),
+        Seq(1.0, Double.NaN, 3.0))).toDF()
 
     val suite = ConstraintSuite("doc_id", Seq(
       // enum violation at some_inner.inner_value (reference: enum [1,"value"])
@@ -46,7 +49,9 @@ class SpanGoldenSpec extends SparkSpec {
       ArrayElemPattern("some_inner.inner_values", "^[a-z0-9]+$"),
       ArrayElemLength("some_inner.inner_values", max = Some(5)),
       MapKeyPattern("props", "^[a-z_]+$"),
-      MapKeyLength("props", max = Some(20))))
+      MapKeyLength("props", max = Some(20)),
+      ArrayElemRange("v", 0, 10),
+      ArrayTailRange("v", 1, 0, 10)))
 
     val compiled = suite.compile(df.schema).fold(es => fail(es.map(_.msg).mkString("; ")), identity)
     val vios = compiled.run(df).violations
@@ -57,16 +62,19 @@ class SpanGoldenSpec extends SparkSpec {
       "props.unexpected_property",
       "some_int"))
     val spans = vios
-      .filter($"constraint_id".rlike("^(elemPattern|elemLength|mapKeyPattern|mapKeyLength)"))
+      .filter($"constraint_id".rlike("^(elemPattern|elemLength|mapKeyPattern|mapKeyLength|elemRange|elemTail)"))
       .select("doc_id", "constraint_id", "path", "bound", "actual").as[(String, String, String, String, String)]
-      .collect().toSet
-    assert(spans === Set(
+      .collect()
+    assert(spans.length === 6)
+    assert(spans.toSet === Set(
       ("elemPattern", "elemPattern(some_inner.inner_values)", "some_inner.inner_values.1",
         "elem pattern ^[a-z0-9]+$", "Bad!"),
       ("elemLength", "elemLength(some_inner.inner_values)", "some_inner.inner_values.0",
         "elem length in [0,5]", "toolong"),
       ("keyPattern", "mapKeyPattern(props)", "props.Bad-Key", "key pattern ^[a-z_]+$", "Bad-Key"),
       ("keyLength", "mapKeyLength(props)", "props.a_very_long_property_name",
-        "key length in [0,20]", "25")))
+        "key length in [0,20]", "25"),
+      ("elemNaN", "elemRange(v)", "v.1", "elem in [0.0,10.0]", "NaN"),
+      ("elemNaN", "elemTail(v.1+)", "v.1", "elem@>=1 in [0.0,10.0]", "NaN")))
   }
 }
